@@ -42,6 +42,7 @@ from collections.abc import Callable, Iterable, Iterator
 from itertools import islice
 
 from pyspark import RDD, StorageLevel
+from pyspark.shuffle import ExternalSorter
 from pyspark.sql import DataFrame, SparkSession
 
 _identity = lambda x: x  # noqa: E731
@@ -646,13 +647,23 @@ class PMap(PBase):
         return self.a_group_by(key, value).reduce(binop)
 
     def sort_by(self, key: Callable) -> "PMap":
-        """Globally key-sorted output (dampr/dampr.py:412-422): Spark range-
-        partitioned sort replaces the reference's sorted-run merge."""
-        return PMap(
-            lambda: self._rdd.map(lambda kv: (key(kv[1]), kv[1])).sortByKey(),
-            self._spark,
-            parents=(self,),
-        )
+        """Globally key-sorted output (dampr/dampr.py:412-422), in the
+        reference's own model: sorted runs plus merge on read. Each
+        partition sorts its values by key where it stands (ExternalSorter,
+        so a large partition spills) and readback heapq.merges the runs,
+        as for ``reduce`` outputs. No range shuffle, and none of
+        ``sortByKey``'s eager count and sampling jobs at build time."""
+
+        def build() -> RDD:
+            keyed = self._rdd.map(lambda kv: (key(kv[1]), kv[1]))
+            memory_mb = keyed._memory_limit() * 0.9
+
+            def sort_partition(it: Iterator) -> Iterator:
+                return iter(ExternalSorter(memory_mb).sorted(it, key=lambda kv: kv[0]))
+
+            return keyed.mapPartitions(sort_partition)
+
+        return PMap(build, self._spark, parents=(self,), psorted=True)
 
     def count(self, key: Callable = _identity, **_) -> "PMap":
         """(key(v), 1) summed with combiner → (k, n) (dampr/dampr.py:439-448)."""
@@ -1435,7 +1446,7 @@ class Dampr:
           the same post-shuffle object share the JVM shuffle id, and
           Spark's scheduler skips already-computed shuffle map stages
           across the jobs of one application — the map side of a shared
-          ``group_by``/``join``/``sort_by`` runs once with no help
+          ``group_by``/``fold_by``/``join`` runs once with no help
           (pinned by the accumulator test).
         - **Narrow/scan sharing needs a persist.** A shared parent with
           only narrow ops between it and the leaves would re-run its scan

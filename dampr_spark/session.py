@@ -13,6 +13,16 @@ knobs we own are the ones below.  They are chosen so the same code runs on
   raise ``initialPartitionNum`` instead of this code changing.
 - Arrow enabled so pandas-UDF operators (the custom-operator escape hatch) use
   vectorized batch transfer rather than row-at-a-time pickling.
+- Python workers start from ``dampr_spark.workerd``, not ``pyspark.daemon``
+  (``spark.python.daemon.module``). Before every task PySpark calls
+  ``importlib.invalidate_caches()``, which on CPython 3.11 re-reads the
+  central directory of ``pyspark.zip``, the py4j zip and the ``spark-core``
+  jar once per zipimporter: ~0.2 s of CPU per task, more than most tasks
+  of the fluent API spend on their data. The daemon skips the re-read
+  while an archive is unchanged (see its docstring). The directory holding
+  ``dampr_spark`` joins the workers' ``PYTHONPATH`` so the daemon imports
+  from any working directory. Sessions built without ``get_spark`` keep
+  PySpark's own daemon.
 """
 
 from __future__ import annotations
@@ -22,6 +32,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# The directory that contains the dampr_spark package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -67,6 +80,18 @@ def get_spark(
         # construction — it cannot be enabled later at runtime.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    worker_path = conf.pop("spark.executorEnv.PYTHONPATH", "")
+    builder = (
+        builder
+        # Workers start from dampr_spark.workerd, which must be importable
+        # wherever the driver was started.
+        .config("spark.python.daemon.module", "dampr_spark.workerd")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (_PACKAGE_ROOT, worker_path) if p),
+        )
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

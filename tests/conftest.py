@@ -30,6 +30,7 @@ import pytest
 
 SF_DIR = os.environ.get("DAMPR_SPARK_TEST_SF", "/root/testdata/sf0.001")
 _FAST_LANE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".fast_lane.json")
+_DROPPED = pytest.StashKey[int]()
 
 
 @pytest.fixture(scope="session")
@@ -78,3 +79,13 @@ def pytest_collection_modifyitems(config, items):
     if dropped:
         config.hook.pytest_deselected(items=dropped)
         items[:] = keep
+    config.stash[_DROPPED] = len(dropped)
+
+
+def pytest_report_collectionfinish(config, items):
+    dropped = config.stash.get(_DROPPED, None)
+    if dropped is not None:
+        return (
+            f"fast lane: {dropped} slow tests deselected, listed in {_FAST_LANE}"
+            " (full suite: python tests/run_sharded.py)"
+        )

@@ -67,6 +67,19 @@ def test_sort_by(items):
     assert res == list(range(19, 9, -1))
 
 
+def test_sort_by_builds_without_a_job(spark):
+    # sortByKey ran a count and a sampling job while its RDD was built;
+    # the sorted-runs layout builds lazily and still reads in global order.
+    tracker = spark.sparkContext.statusTracker()
+    pipe = Dampr.memory([7, 3, 9, 1, 8, 2, 6, 4, 5, 0], partitions=3).sort_by(lambda x: x)
+    before = set(tracker.getJobIdsForGroup())
+    pipe._rdd  # force the lazy build
+    assert set(tracker.getJobIdsForGroup()) == before
+    out = pipe.run()
+    assert out.read(4) == [0, 1, 2, 3]
+    assert list(out.stream()) == list(range(10))
+
+
 def test_inner_join(items):
     # test_dampr.py:75-86: join matching parity groups
     other = Dampr.memory(list(range(10)), partitions=2)
